@@ -138,18 +138,6 @@ def hash_family_member(digest: Column, i: int, n_hashes: int = 8) -> Column:
     )
 
 
-def _seeded_md5(seed: int):
-    # retained for callers wanting an explicit seeded family (n_hashes
-    # md5s per element — the rotation family above is the cheap path).
-    # NB: must be a 1-arg lambda — pyspark treats a 2-parameter lambda
-    # as (element, index), so a `lambda s, i=i:` closure silently
-    # hashes with the POSITION as part of the captured variable
-    def fn(s: Column) -> Column:
-        return F.md5(F.concat(F.lit(f"{seed}|"), s))
-
-    return fn
-
-
 def _rot_md5(i: int, n_hashes: int):
     # 1-arg factory (a 2-param lambda would be treated as (element, index))
     def fn(s: Column) -> Column:
@@ -738,16 +726,25 @@ def duplicate_clusters(
 
     ADAPTIVE EXECUTION: the deduplicated pair set is materialized
     first (it must be, to truncate lineage for the loop), so its count
-    is free — and when it is at most ``driver_threshold`` distinct
-    pairs (default 1M ≈ a few MB: model-scale, the k-means-collect
-    policy; an upper bound of the canonical edge count) the components
-    are solved in one driver-side union-find pass over the collected
-    pairs — including the singleton labels, so no further Spark job
-    runs at all — instead of log-n distributed rounds, each of which
-    costs two full Spark jobs of fixed latency. A 100 TB corpus whose
-    pair stage emits billions of edges takes the distributed path
-    automatically; ``driver_threshold=0`` forces it (the d9 gate pins
-    it that way). Both paths produce identical labels (pytest-pinned).
+    is free — and when it is at most ``driver_threshold`` (default 1M
+    ≈ a few MB: model-scale, the k-means-collect policy) the
+    components are solved in one driver-side union-find pass over the
+    collected pairs — including the singleton labels, so no further
+    Spark job runs at all — instead of log-n distributed rounds, each
+    of which costs two full Spark jobs of fixed latency. The threshold
+    counts distinct raw ``(u, v)`` rows as the caller emitted them —
+    ``(a, b)`` and ``(b, a)`` count as two rows and a self-pair
+    ``(a, a)`` as one — not canonical edges, so it is an upper bound
+    of the edge count. A
+    100 TB corpus whose pair stage emits billions of edges takes the
+    distributed path automatically; ``driver_threshold=0`` forces it
+    (the d9 gate pins it that way). Both paths produce identical
+    labels (pytest-pinned).
+
+    A pair with a null id is no edge: its non-null id is a singleton
+    unless edged elsewhere, and a null id is returned once as
+    ``(None, None)`` — on both paths, since SQL equality never matches
+    null.
 
     Alternating large-star/small-star contraction (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14):
@@ -828,8 +825,8 @@ def duplicate_clusters(
             u, v = r["u"], r["v"]
             members.add(u)
             members.add(v)
-            if u == v:
-                continue  # self-pair: singleton unless edged elsewhere
+            if u == v or u is None or v is None:
+                continue  # self/null pair: singleton unless edged elsewhere
             ra, rb = _find(u), _find(v)
             if ra != rb:
                 if rb < ra:
@@ -841,8 +838,10 @@ def duplicate_clusters(
         )
         # edge-less members label themselves: the singleton clusters
         # the old anti-join branch produced, now for free
+        null = [(None, None)] if None in members else []
+        members.discard(None)
         return pairs.sparkSession.createDataFrame(
-            [(x, _find(x)) for x in sorted(members)], schema
+            [(x, _find(x)) for x in sorted(members)] + null, schema
         )
 
     # canonical (child > parent) orientation; both star steps preserve it

@@ -14,19 +14,34 @@ Scale shape of the covariance pass: each row explodes to its
 upper-triangle second-moment contributions (d(d+1)/2 structs — CPU
 work inherent to covariance) and a map-side-combined groupBy reduces
 them to d(d+1)/2 rows total crossing the wire per partition. No step
-materializes more than the model. For d in the hundreds-plus,
-``pca_fit(engine="arrow")`` switches the moment pass to
-:func:`moment_table_arrow` — BLAS partials per Arrow batch, one
-d(d+1)/2-row partial per partition, same aggregation contract
-(pytest-pinned equivalent to the explode path).
+materializes more than the model. :func:`covariance_table` (the s9
+oracle gate) and :func:`pca_fit` share that one moment pass and differ
+only in the final aggregate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, GroupedData
 from pyspark.sql import functions as F
 
 from sparkt.sources import spread
+
+
+def _moment_groups(df: DataFrame, vec_col: str, dim: int) -> GroupedData:
+    """The moment pass: every row explodes to one ``(i, j, xy, xi, xj)``
+    struct per upper-triangle pair ``1 <= i <= j <= dim`` of its first
+    ``dim`` components, grouped by ``(i, j)`` for a map-side-combined
+    aggregate."""
+    pairs = F.expr(
+        f"""flatten(transform(sequence(1, {int(dim)}), i ->
+              transform(sequence(i, {int(dim)}), j -> struct(
+                i AS i, j AS j,
+                element_at({vec_col}, i) * element_at({vec_col}, j) AS xy,
+                element_at({vec_col}, i) AS xi,
+                element_at({vec_col}, j) AS xj))))"""
+    )
+    ex = spread(df).select(F.explode(pairs).alias("p")).select("p.*")
+    return ex.groupBy("i", "j")
 
 
 def covariance_table(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
@@ -43,109 +58,28 @@ def covariance_table(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     — would round AT the signal scale); ``+ 0.0`` collapses IEEE
     negative zero, which the two engines would otherwise format
     differently ('-0' vs '0')."""
-    pairs = F.expr(
-        f"""flatten(transform(sequence(1, {int(dim)}), i ->
-              transform(sequence(i, {int(dim)}), j -> struct(
-                i AS i, j AS j,
-                element_at({vec_col}, i) * element_at({vec_col}, j) AS xy,
-                element_at({vec_col}, i) AS xi,
-                element_at({vec_col}, j) AS xj))))"""
-    )
-    ex = spread(df).select(F.explode(pairs).alias("p")).select("p.*")
-    return ex.groupBy("i", "j").agg(
+    return _moment_groups(df, vec_col, dim).agg(
         (F.round(F.avg("xy") - F.avg("xi") * F.avg("xj"), 7)
          + F.lit(0.0)).alias("cov")
     )
 
 
-def moment_table_arrow(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
-    """The high-dim covariance path: Arrow ``mapInPandas`` partial
-    second moments — one BLAS ``MᵀM`` per Arrow batch inside the
-    Python worker, ONE d(d+1)/2-row partial per partition crossing the
-    wire, then a map-side-combined groupBy merge. Same aggregation
-    contract as the explode path (``i, j, n, sxy, sxi, sxj`` sums) but
-    the per-row d² work runs vectorized instead of as d² codegen
-    structs — the right trade once d is in the hundreds (the explode
-    path wins below that by staying JVM-side; pca_fit exposes both).
-    """
-    import numpy as np
-
-    iu_i, iu_j = np.triu_indices(dim)
-
-    def batches(it):
-        import pandas as pd_
-
-        s = np.zeros(dim)
-        ss = np.zeros((dim, dim))
-        n = 0
-        for pdf in it:
-            mat = np.asarray(
-                [list(v[:dim]) for v in pdf[vec_col]], dtype=np.float64
-            )
-            if not len(mat):
-                continue
-            n += len(mat)
-            s += mat.sum(axis=0)
-            ss += mat.T @ mat
-        if n:
-            yield pd_.DataFrame(
-                {
-                    "i": (iu_i + 1).astype("int32"),
-                    "j": (iu_j + 1).astype("int32"),
-                    "n": np.full(len(iu_i), n, dtype="int64"),
-                    "sxy": ss[iu_i, iu_j],
-                    "sxi": s[iu_i],
-                    "sxj": s[iu_j],
-                }
-            )
-
-    partials = spread(df).select(vec_col).mapInPandas(
-        batches,
-        "i int, j int, n long, sxy double, sxi double, sxj double",
-    )
-    return partials.groupBy("i", "j").agg(
-        (F.sum("sxy") / F.sum("n")).alias("exy"),
-        (F.sum("sxi") / F.sum("n")).alias("exi"),
-        (F.sum("sxj") / F.sum("n")).alias("exj"),
-    )
-
-
-def pca_fit(
-    df: DataFrame, vec_col: str, dim: int, k: int,
-    engine: str = "explode",
-) -> dict:
+def pca_fit(df: DataFrame, vec_col: str, dim: int, k: int) -> dict:
     """Fit a ``k``-component PCA: one distributed covariance pass
     (UNROUNDED — rounding is only the oracle gate's cross-engine
     contract), then ``numpy.linalg.eigh`` on the driver over the d×d
     matrix (model-scale collect). Components are sign-normalized
     (largest-|weight| entry positive) so the model is deterministic.
 
-    ``engine="explode"`` (default) keeps the moment pass JVM-side —
-    right for d up to the low hundreds; ``engine="arrow"`` switches to
-    :func:`moment_table_arrow` (vectorized BLAS partials) for larger d.
-
     Returns ``{"mean": [d], "components": [k][d], "variance": [k]}``
     with components ordered by descending eigenvalue."""
     import numpy as np
 
-    if engine == "arrow":
-        ex = moment_table_arrow(df, vec_col, dim)
-        rows = ex.collect()  # d(d+1)/2 rows — the model, not the data
-    else:
-        pairs = F.expr(
-            f"""flatten(transform(sequence(1, {int(dim)}), i ->
-                  transform(sequence(i, {int(dim)}), j -> struct(
-                    i AS i, j AS j,
-                    element_at({vec_col}, i) * element_at({vec_col}, j) AS xy,
-                    element_at({vec_col}, i) AS xi,
-                    element_at({vec_col}, j) AS xj))))"""
-        )
-        ex = spread(df).select(F.explode(pairs).alias("p")).select("p.*")
-        rows = ex.groupBy("i", "j").agg(
-            F.avg("xy").alias("exy"),
-            F.avg("xi").alias("exi"),
-            F.avg("xj").alias("exj"),
-        ).collect()  # d(d+1)/2 rows — the model, not the data
+    rows = _moment_groups(df, vec_col, dim).agg(
+        F.avg("xy").alias("exy"),
+        F.avg("xi").alias("exi"),
+        F.avg("xj").alias("exj"),
+    ).collect()  # d(d+1)/2 rows — the model, not the data
 
     cov = np.zeros((dim, dim))
     mean = np.zeros(dim)

@@ -279,14 +279,16 @@ def _cell_assignment(vec: Column, centroids: list[list[float]]) -> Column:
     return F.array_max(F.array(*scored))["c"]
 
 
-# Above this cell count the expression path's k HOF dot-folds per row
+# Above this cell count the expression path's k HOF folds per row
 # (Spark evaluates higher-order functions INTERPRETED, not codegen)
 # become the bottleneck: measured r15, 256 cells × aggregate(zip_with)
-# over 20k rows did not finish in 9 min, while the Arrow matmul path
-# below does the identical assignment in seconds. The expression path
-# stays for small cell counts — it is engine-portable (the DuckDB
-# oracles replay it literally), needs no Python workers, and at k ≤ 32
-# is faster than a UDF round-trip.
+# over 20k rows did not finish in 9 min, while the Arrow kernels
+# (:func:`_cell_assign_pandas` / :func:`_probe_cells_pandas` for
+# argmax-dot, :func:`_argmin_l2_exact_pandas` for argmin-L2) do the
+# identical assignment in seconds. The expression path stays for small
+# cell counts — it is engine-portable (the DuckDB oracles replay it
+# literally), needs no Python workers, and at k ≤ 32 is faster than a
+# UDF round-trip.
 _PANDAS_ASSIGN_MIN_CELLS = 33
 
 
@@ -370,7 +372,7 @@ def ivf_topk(
     big = n_cells >= _PANDAS_ASSIGN_MIN_CELLS
     if trained:
         assign = (
-            (lambda v: kmeans_assign_pandas(v, cents)) if big
+            (lambda v: _argmin_l2_exact_pandas(v, cents)) if big
             else (lambda v: kmeans_assign(v, cents))
         )
     else:
@@ -429,33 +431,35 @@ def ivf_topk(
 def _pair_scores_arrow(
     left: DataFrame, right: DataFrame, threshold: float, id_type
 ) -> DataFrame:
-    """Cell-cogrouped Arrow pair scorer — the scale twin of the
-    expression path's per-pair HOF cosine in
-    :func:`cosine_neardup_pairs` (guide §4: hand whole batches to
-    numpy instead of interpreting a 64-term fold per candidate pair;
-    r15 measured the HOF fold at 785 s for the 500k/256-cell rung's
-    ~3.9 G pairs, dominated by per-pair interpretation AND by
-    materializing every joined pair row in the JVM).
+    """Cell-cogrouped Arrow pair scorer of :func:`cosine_neardup_pairs`
+    (guide §4: hand whole batches to numpy instead of interpreting a
+    64-term fold per candidate pair; r15 measured a per-pair HOF cosine
+    join at 785 s for the 500k/256-cell rung's ~3.9 G pairs, dominated
+    by per-pair interpretation AND by materializing every joined pair
+    row in the JVM).
 
     Each vector crosses the Python boundary ONCE PER CELL MEMBERSHIP
     (n·(1+n_probe) rows), never once per pair — the §8 rule: decide
     with a matmul, don't move payloads per decision. Only surviving
     pairs come back.
 
-    BIT-EXACT parity with the expression path (pytest-pinned), in two
-    phases per block: (1) a BLAS matmul computes PREFILTER scores only
-    — reassociated summation, never returned; its deviation from the
-    sequential fold is ≤ dim·eps (Cauchy-Schwarz), nine orders below
-    the prefilter margin; (2) pairs surviving the prefilter (the
-    ~0.1-1% near the threshold at production settings) get their dot
-    recomputed as the exact left-assoc fold, one dimension at a time
-    (``acc += Ai[:, d] * Bj[:, d]``) — the identical IEEE-double op
-    order as ``aggregate(zip_with(va, vb, *), 0.0, +)``; ``na·nb``
-    and the division are single IEEE ops in both engines. The 4dp
-    HALF_UP round and the authoritative threshold filter stay in the
-    JVM — Python prefilters at ``threshold - 1e-4`` (a provable
-    superset: round(x,4) >= t implies x >= t - 0.00005), so no
-    rounding semantics ever cross the boundary."""
+    BIT-EXACT equal to the sequential HOF cosine
+    ``aggregate(zip_with(va, vb, *), 0.0, +) / (na·nb)`` (pytest-pinned
+    against that expression), in two phases per block: (1) a BLAS
+    matmul computes PREFILTER scores only — reassociated summation,
+    never returned; its deviation from the sequential fold is ≤ dim·eps
+    (Cauchy-Schwarz), nine orders below the prefilter margin; (2) pairs
+    surviving the prefilter (the ~0.1-1% near the threshold at
+    production settings) get their dot recomputed as the exact
+    left-assoc fold, one dimension at a time (``acc += Ai[:, d] *
+    Bj[:, d]``) — the identical IEEE-double op order as the HOF fold;
+    ``na·nb`` and the division are single IEEE ops in both engines. A
+    zero norm scores NaN and never passes the prefilter, so an all-zero
+    vector pairs with nothing. The 4dp HALF_UP round and the
+    authoritative threshold filter stay in the JVM — Python prefilters
+    at ``threshold - 1e-4`` (a provable superset: round(x,4) >= t
+    implies x >= t - 0.00005), so no rounding semantics ever cross the
+    boundary."""
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -525,7 +529,6 @@ def cosine_neardup_pairs(
     dim: int = 64,
     n_cells: int = 8,
     n_probe: int | None = None,
-    scorer: str = "auto",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos ≥
     threshold) via an IVF-cell bucketed EQUIJOIN — never an all-pairs
@@ -540,17 +543,13 @@ def cosine_neardup_pairs(
     ``n_probe`` small: cells become the partition key, the shuffle is an
     equijoin on cell id, and only nearby cells are compared.
 
-    ``scorer``: how candidate pairs are scored. ``"expr"`` = the
-    engine-portable per-pair HOF cosine inside the cell equijoin (the
-    oracle gates' path); ``"arrow"`` = :func:`_pair_scores_arrow`, a
-    cell-cogrouped numpy block scorer that is bit-identical by
-    construction (pytest-pinned) and orders of magnitude faster when
-    within-cell candidate volume is large; ``"auto"`` (default)
-    follows the ``_PANDAS_ASSIGN_MIN_CELLS`` convention — large cell
-    counts mark the scale configuration, small ones the oracle-parity
-    gates."""
+    Candidate pairs are scored per cell by :func:`_pair_scores_arrow`,
+    whose cosines equal the per-pair ``aggregate(zip_with)`` fold bit
+    for bit. Null and all-zero vectors have no cosine: they are
+    dropped or score nothing, so they pair with nothing."""
     cents = _pseudo_centroids(dim, n_cells)
     big = n_cells >= _PANDAS_ASSIGN_MIN_CELLS
+    df = df.filter(F.col(vec).isNotNull())
     assign = (
         _cell_assign_pandas(F.col(vec), cents) if big
         else _cell_assignment(F.col(vec), cents)
@@ -580,26 +579,12 @@ def cosine_neardup_pairs(
         norm(F.col(vec)).alias("na"),
         F.explode(probes).alias("cell"),
     )
-    if scorer not in ("auto", "expr", "arrow"):
-        raise ValueError(f"scorer must be auto|expr|arrow, got {scorer!r}")
-    if scorer == "arrow" or (scorer == "auto" and big):
-        raw = _pair_scores_arrow(
-            left, right, threshold, df.schema[id_col].dataType
-        )
-        # authoritative 4dp round + threshold stay JVM-side (HALF_UP)
-        return (
-            raw.withColumn("cos", F.round("cos", 4))
-            .filter(F.col("cos") >= threshold)
-            .select("id_a", "id_b", "cos")
-        )
+    raw = _pair_scores_arrow(
+        left, right, threshold, df.schema[id_col].dataType
+    )
+    # authoritative 4dp round + threshold stay JVM-side (HALF_UP)
     return (
-        left.join(right, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos",
-            F.round(dot(F.col("va"), F.col("vb"))
-                    / (F.col("na") * F.col("nb")), 4),
-        )
+        raw.withColumn("cos", F.round("cos", 4))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )
@@ -758,47 +743,20 @@ def kmeans_assign(vec: Column, centroids: list[list[float]]) -> Column:
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
-def kmeans_assign_pandas(
-    vec: Column, centroids: list[list[float]]
-) -> Column:
-    """Argmin-L2 cell via one numpy distance matrix per Arrow batch —
-    the large-k twin of :func:`kmeans_assign` (same first-minimum =
-    lowest-cell tie-break via np.argmin). Used automatically above
-    ``_PANDAS_ASSIGN_MIN_CELLS``: k interpreted HOF folds per row do
-    not scale (the r15 256-cell measurement), one matmul per batch
-    does. ||q-c||² = ||q||² - 2q·c + ||c||²; the ||q||² term is
-    rank-invariant and dropped."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.array(centroids, dtype=np.float64)
-    c2 = (C * C).sum(axis=1)
-
-    @pandas_udf("int")
-    def _assign(v: pd.Series) -> pd.Series:
-        M = np.array(v.tolist(), dtype=np.float64)
-        if M.size == 0:
-            return pd.Series([], dtype="int32")
-        d = c2[None, :] - 2.0 * (M @ C.T)
-        return pd.Series(d.argmin(axis=1).astype("int32"))
-
-    return _assign(vec)
-
-
 def _argmin_l2_exact_pandas(
     vec: Column, mat: list[list[float]]
 ) -> Column:
-    """Argmin-L2 with the expression path's EXACT arithmetic, one
-    vectorized numpy pass per Arrow batch: squared L2 accumulates one
-    dimension at a time (``acc += (x−y)·(x−y)``, dims ascending — the
-    identical IEEE-double op order as :func:`kmeans_assign`'s
-    zip_with/aggregate fold), so every distance and the first-minimum
-    tie-break (np.argmin = first occurrence = ``array_position``'s
-    lowest index) are bit-identical to the expression path.
-    :func:`kmeans_assign_pandas`'s matmul shortcut reassociates the
-    sum and is pinned only empirically — fine for the scale configs,
-    not for an oracle-hashed gate. This variant is exact by
-    construction (the W1 phase-2 argument applied to argmin)."""
+    """Argmin-L2 cell with :func:`kmeans_assign`'s EXACT arithmetic,
+    one vectorized numpy pass per Arrow batch — its large-k twin
+    (above ``_PANDAS_ASSIGN_MIN_CELLS``) and the corpus-side cell
+    assign of :func:`ivfpq_topk`. Squared L2 accumulates one dimension
+    at a time (``acc += (x−y)·(x−y)``, dims ascending — the identical
+    IEEE-double op order as the zip_with/aggregate fold), so every
+    distance and the first-minimum tie-break (np.argmin = first
+    occurrence = ``array_position``'s lowest index) are bit-identical
+    by construction (the W1 phase-2 argument applied to argmin). No
+    matmul shortcut: ``||q||² − 2q·c + ||c||²`` reassociates the sum
+    and can flip a near-tie."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -855,11 +813,11 @@ def kmeans_fit(
     )
     cents = [[_q6(float(x)) for x in r[1]] for r in first]
     dim = len(cents[0])
-    # large k: Arrow matmul assignment (same argmin/tie-break; the
-    # expression path's k interpreted HOF folds per row dominate the
-    # fit wall at k ≥ ~33 — the r15 scale measurement)
+    # large k: the exact Arrow argmin-L2 kernel (same distances and
+    # tie-break; the expression path's k interpreted HOF folds per row
+    # dominate the fit wall at k ≥ ~33 — the r15 scale measurement)
     assign_fn = (
-        kmeans_assign_pandas if k >= _PANDAS_ASSIGN_MIN_CELLS
+        _argmin_l2_exact_pandas if k >= _PANDAS_ASSIGN_MIN_CELLS
         else kmeans_assign
     )
     for _ in range(iters):
@@ -922,42 +880,39 @@ def _pq_codebooks(
     return books
 
 
-def _argmin_code(dists: Column) -> Column:
-    """First occurrence of the minimum = lowest-index tie-break (same
-    contract as :func:`kmeans_assign`; DuckDB mirror is
-    ``list_position(d, list_min(d)) - 1``)."""
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
 def _pq_codes_pandas(
     vec: Column, books: list[list[list[float]]]
 ) -> Column:
-    """PQ code array via one vectorized numpy pass per Arrow batch —
-    the scale twin of :func:`pq_encode`'s per-subspace expression
-    argmin. BIT-EXACT: per subspace the squared L2 to all codes
+    """PQ code array of :func:`pq_encode`, one vectorized numpy pass
+    per Arrow batch. Per subspace the squared L2 to all codes
     accumulates one dimension at a time (identical IEEE op order as
-    :func:`_l2sq`'s fold) and np.argmin's first-occurrence tie-break
-    equals ``array_position``'s lowest index (pytest-pinned)."""
+    :func:`_l2sq`'s fold, which the s12 oracle replays) and np.argmin's
+    first-occurrence tie-break is the lowest code index, so every code
+    equals the SQL ``list_position(d, list_min(d)) - 1``."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     B = np.array(books, dtype=np.float64)  # (m, n_codes, sub)
+    m, n_codes, sub = B.shape
 
     @pandas_udf("array<int>")
     def _codes(v: pd.Series) -> pd.Series:
-        X = np.array(v.tolist(), dtype=np.float64)
-        if X.size == 0:
-            return pd.Series([], dtype=object)
-        m, n_codes, sub = B.shape
-        out = np.empty((X.shape[0], m), dtype=np.int32)
-        for j in range(m):
-            Xs = X[:, j * sub:(j + 1) * sub]
-            acc = np.zeros((X.shape[0], n_codes))
-            for d in range(sub):
-                diff = Xs[:, d, None] - B[j, None, :, d]
-                acc += diff * diff
-            out[:, j] = acc.argmin(axis=1)
-        return pd.Series([r.tolist() for r in out])
+        ok = v.notna().to_numpy()
+        X = np.array(v[ok].tolist(), dtype=np.float64)
+        out = np.empty((len(X), m), dtype=np.int32)
+        if len(X):
+            for j in range(m):
+                Xs = X[:, j * sub:(j + 1) * sub]
+                acc = np.zeros((len(X), n_codes))
+                for d in range(sub):
+                    diff = Xs[:, d, None] - B[j, None, :, d]
+                    acc += diff * diff
+                out[:, j] = acc.argmin(axis=1)
+        # a null vector keeps its row, with one null code per subspace
+        codes = iter(out.tolist())
+        return pd.Series(
+            [next(codes) if o else [None] * m for o in ok], dtype=object
+        )
 
     return _codes(vec)
 
@@ -970,43 +925,24 @@ def pq_encode(
     m: int = 8,
     n_codes: int = 16,
     keep: list[str] | None = None,
-    encoder: str = "expr",
 ) -> DataFrame:
     """Product-quantization encode: each ``dim``-float vector becomes
     ``m`` small integer codes (argmin-L2 sub-quantizer per subspace) —
-    a PURE PROJECTION, no join, no shuffle, no Python.
+    a narrow projection, no join, no shuffle. The codes are computed
+    by :func:`_pq_codes_pandas` in Arrow batches: the equivalent HOF
+    expression costs m·n_codes·sub interpreted fold ops per row (23.5 s
+    for 500k rows at the r16 rung). A null vector gets ``m`` null codes.
 
     This is the memory scale path for ANN corpora beyond
     :func:`quantize_int8`'s 4×: at dim=64/m=8 the stored row shrinks
     from 256 B of floats to 8 code bytes (32×), so a 100 TB embedding
     corpus's searchable index fits in ~3 TB of executor memory and the
     ADC scan in :func:`ivfpq_topk` reads 32× fewer bytes."""
-    sub = dim // m
     books = _pq_codebooks(dim, m, n_codes)
     cols = [F.col(id_col)] + [F.col(c) for c in (keep or [])]
-    if encoder not in ("expr", "arrow"):
-        raise ValueError(f"encoder must be expr|arrow, got {encoder!r}")
-    if encoder == "arrow":
-        # bit-identical numpy batch encode (guide §4): the expression
-        # path's m·n_codes·sub interpreted fold ops per row cost 23.5 s
-        # for 500k rows at the r16 rung; one vectorized pass per Arrow
-        # batch does the same arithmetic in the same IEEE order
-        return df.select(
-            *cols, _pq_codes_pandas(F.col(vec), books).alias("codes")
-        )
-
-    # closure factory, NOT `lambda c, _sv=sv`: a two-param lambda makes
-    # F.transform pass (element, index) and the INDEX silently replaces
-    # the default — the bug the s12 gate caught on first execution.
-    def _dist_to(sv):
-        return lambda c: _l2sq(sv, c)
-
-    codes = []
-    for j, book in enumerate(books):
-        sv = F.slice(F.col(vec), j * sub + 1, sub)
-        dists = F.transform(_const_matrix(book), _dist_to(sv))
-        codes.append(_argmin_code(dists))
-    return df.select(*cols, F.array(*codes).alias("codes"))
+    return df.select(
+        *cols, _pq_codes_pandas(F.col(vec), books).alias("codes")
+    )
 
 
 def ivfpq_topk(
@@ -1021,7 +957,7 @@ def ivfpq_topk(
     query_id: str = "query_id",
     corpus_id: str = "corpus_id",
     vec: str = "embedding",
-    encoder: str = "expr",
+    encoder: str = "arrow",
 ) -> DataFrame:
     """IVF-PQ approximate nearest neighbours (the FAISS IVFPQ
     architecture, re-expressed Spark-first): the corpus is coarsely
@@ -1037,24 +973,26 @@ def ivfpq_topk(
     8-float fold, all inside whole-stage codegen over rows 32× smaller
     than the raw vectors. No residual encoding (FAISS
     ``by_residual=false``): codes quantize the raw vector, which keeps
-    the codebooks cell-independent and the oracle exact."""
+    the codebooks cell-independent and the oracle exact.
+
+    The corpus-side cell assign and PQ encode run as exact numpy
+    passes per Arrow batch (:func:`_argmin_l2_exact_pandas`,
+    :func:`_pq_codes_pandas`); as HOF folds they cost 38 s of the 52 s
+    500k-rung wall (r16). Corpus rows with a null vector are dropped.
+    ``encoder`` accepts only ``"arrow"``, the one encoder; the keyword
+    stays so callers that pass it keep working."""
+    if encoder != "arrow":
+        raise ValueError(
+            f"encoder must be 'arrow' (the only PQ encoder), got {encoder!r}"
+        )
     sub = dim // m
     cents = _pseudo_centroids(dim, n_cells)
     books = _pq_codebooks(dim, m, n_codes)
-    # encoder='arrow' (r16): the corpus-side cell assign + PQ encode —
-    # n_cells·dim + m·n_codes·sub interpreted fold ops per row, 38 s
-    # of the 52 s rung wall — run as bit-exact numpy batch passes
-    # (same IEEE fold order, same first-min tie-break; pytest-pinned)
-    assign = (
-        _argmin_l2_exact_pandas(F.col(vec), cents)
-        if encoder == "arrow"
-        else kmeans_assign(F.col(vec), cents)
-    )
     enc = pq_encode(
-        corpus.select(
+        corpus.filter(F.col(vec).isNotNull()).select(
             F.col(corpus_id),
             F.col(vec),
-            assign.alias("cell"),
+            _argmin_l2_exact_pandas(F.col(vec), cents).alias("cell"),
         ),
         id_col=corpus_id,
         vec=vec,
@@ -1062,7 +1000,6 @@ def ivfpq_topk(
         m=m,
         n_codes=n_codes,
         keep=["cell"],
-        encoder=encoder,
     )
     # query probe list: the n_probe nearest coarse cells by iterated
     # argmin-L2 with lowest-index tie-break — round p masks the p-1

@@ -3,6 +3,7 @@ multimodal plumbing)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -253,6 +254,76 @@ def test_cosine_neardup_bucketed_not_all_pairs(spark):
         emb, "vec_id", "embedding", 0.35, dim=64, n_cells=8, n_probe=2
     )
     assert part.exceptAll(full).count() == 0
+
+
+def _vector_rows(spark, rows):
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+@pytest.mark.parametrize("n_cells", [8, 40])
+def test_cosine_neardup_skips_null_and_zero_vectors(spark, n_cells):
+    """A null embedding has no cosine and an all-zero one has no
+    direction: neither pairs with anything, and neither may fail the
+    job (numpy 'inhomogeneous shape' on the null, ANSI DIVIDE_BY_ZERO
+    on the zero norm). The expected rows are what the per-pair
+    expression cosine returned for the same vectors without the zero
+    row (brute-force equal at full probe). 40 cells takes the Arrow
+    cell assignment, 8 the expression one."""
+    from sparkt.functions.similarity import cosine_neardup_pairs
+
+    df = _vector_rows(spark, [
+        (1, [1.0, 0.0, 0.0, 0.0]), (2, None), (3, [0.5, 0.5, 0.1, 0.0]),
+        (4, [0.5, 0.45, 0.1, 0.02]), (5, [0.9, 0.1, 0.0, 0.05]),
+        (6, [0.0, 0.0, 0.0, 0.0]), (7, [-1.0, 0.2, 0.3, 0.0]),
+    ])
+    got = sorted(map(tuple, cosine_neardup_pairs(
+        df, threshold=0.8, dim=4, n_cells=n_cells
+    ).collect()))
+    assert got == [(1, 5, 0.9924), (3, 4, 0.9982), (4, 5, 0.8038)]
+
+
+def test_ivfpq_skips_null_corpus_vectors(spark):
+    """Null vectors drop out of the corpus instead of failing the Arrow
+    cell assignment and PQ encode. A null query (id 2) returns no
+    rows. The expected rows are what the expression encoder returned
+    for the same input. Any encoder but "arrow" is rejected."""
+    import numpy as np
+
+    from sparkt.functions.similarity import ivfpq_topk
+
+    vecs = np.random.RandomState(5).uniform(-1, 1, size=(40, 16)).round(3)
+    df = _vector_rows(spark, [
+        (i, None if i in (2, 30) else [float(x) for x in vecs[i]])
+        for i in range(40)
+    ])
+    q = df.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding")
+    c = df.select(F.col("vec_id").alias("corpus_id"), "embedding")
+    got = sorted(map(tuple, ivfpq_topk(
+        q, c, dim=16, k=3, m=4, n_codes=8, n_cells=4, n_probe=2,
+        encoder="arrow",
+    ).collect()))
+    assert got == [
+        (0, 29, 8.3745, 3), (0, 33, 7.2575, 1), (0, 38, 7.7458, 2),
+        (1, 12, 7.8977, 3), (1, 31, 5.6582, 2), (1, 39, 5.3425, 1),
+        (3, 11, 8.6264, 3), (3, 21, 7.8438, 2), (3, 35, 6.9173, 1),
+        (4, 12, 5.5789, 3), (4, 28, 4.5377, 1), (4, 32, 4.8878, 2),
+    ]
+    # the keyword stays for callers that pass it; "arrow" is the only
+    # encoder
+    with pytest.raises(ValueError, match="encoder"):
+        ivfpq_topk(q, c, dim=16, m=4, n_codes=8, n_cells=4, encoder="expr")
+
+
+def test_pq_encode_null_vector_has_null_codes(spark):
+    """pq_encode is a projection: a null vector keeps its row and gets
+    one null code per subspace, as the expression encoder gave it."""
+    from sparkt.functions.similarity import pq_encode
+
+    df = _vector_rows(spark, [(1, [0.5] * 16), (2, None)])
+    got = dict(map(tuple, pq_encode(df, dim=16, m=4, n_codes=8).collect()))
+    assert len(got[1]) == 4 and None not in got[1]
+    assert got[2] == [None] * 4
 
 
 def test_winnowing_guarantee(spark):
@@ -1420,13 +1491,6 @@ def test_pca_fit_project_matches_numpy(spark):
         for j in range(i, 3):
             assert abs(ct[(i + 1, j + 1)] - round(cov_np[i, j], 7)) < 1e-9
 
-    # the high-dim Arrow moment path fits the SAME model (BLAS
-    # partials vs codegen explode — float-tolerance equivalent)
-    am = pca_fit(df, "embedding", dim=3, k=2, engine="arrow")
-    assert np.allclose(am["mean"], model["mean"], atol=1e-9)
-    assert np.allclose(am["components"], model["components"], atol=1e-7)
-    assert np.allclose(am["variance"], model["variance"], atol=1e-9)
-
 
 def test_count_anomalies_median_mad(spark):
     """count_anomalies: a single spiked day flags, steady days don't;
@@ -1671,6 +1735,27 @@ def test_duplicate_clusters_self_pairs_singletons(spark):
         for r in duplicate_clusters(pairs, "id_a", "id_b").collect()
     }
     assert got == {1: 1, 2: 1, 3: 3, 4: 4}
+
+
+def test_duplicate_clusters_null_ids_same_on_both_paths(spark):
+    """A pair with a null id joins no component: its non-null side is
+    a singleton and the null id labels itself. The driver union-find
+    must return the distributed star contraction's rows."""
+    from sparkt.functions.dedup import duplicate_clusters
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (None, 4), (5, None)], "id_a long, id_b long"
+    )
+
+    def rows(**kw):
+        return sorted(
+            map(tuple, duplicate_clusters(pairs, **kw).collect()),
+            key=lambda r: (r[0] is None, r),
+        )
+
+    expected = [(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (None, None)]
+    assert rows(driver_threshold=0) == expected
+    assert rows() == expected
 
 
 def test_minhash_family_distinct_above_eight(spark):

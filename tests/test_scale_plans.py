@@ -416,7 +416,7 @@ def test_pl3_candidates_checkpoint_breaks_reinlining(spark):
 
 def test_pandas_assignment_paths_match_expression_paths(spark):
     """r15: above _PANDAS_ASSIGN_MIN_CELLS the IVF cell assignment /
-    probe ordering switch to Arrow-batched numpy matmuls (k
+    probe ordering switch to Arrow-batched numpy kernels (k
     interpreted HOF folds per row do not scale — 256 cells at 20k
     rows did not finish in 9 min). The two implementations must be
     interchangeable: same argmax/argmin cell, same tie-break, same
@@ -446,7 +446,7 @@ def test_pandas_assignment_paths_match_expression_paths(spark):
         "vec_id", S.kmeans_assign(F.col("embedding"), cents).alias("c")
     )) == m(df.select(
         "vec_id",
-        S.kmeans_assign_pandas(F.col("embedding"), cents).alias("c"),
+        S._argmin_l2_exact_pandas(F.col("embedding"), cents).alias("c"),
     ))
     scored = [
         F.struct(
@@ -527,20 +527,24 @@ def test_ivf_recall_vs_brute_force_bounds(spark):
     assert r8 >= r4                   # more probes never hurt recall
 
 
-def test_arrow_pair_scorer_matches_expression_path(spark):
-    """r16: the cell-cogrouped Arrow pair scorer
-    (similarity._pair_scores_arrow) replaces the per-pair interpreted
-    HOF cosine at large cell counts. Contract: BIT-identical doubles —
-    the numpy block fold accumulates one dimension at a time, which is
-    the same left-assoc IEEE order as aggregate(zip_with(...)); na·nb
-    and the division are single IEEE ops; round/threshold stay in the
-    JVM. Pinned two ways: (1) unrounded cosines of EVERY pair equal the
-    expression join's bit for bit, (2) full gate-shape output parity on
-    both a pruned-probe and a full-probe configuration."""
+def test_pair_scorer_matches_fold_and_brute_force(spark):
+    """The cell-cogrouped Arrow pair scorer
+    (similarity._pair_scores_arrow) behind cosine_neardup_pairs.
+    Contract: BIT-identical doubles to the sequential HOF cosine — the
+    numpy block fold accumulates one dimension at a time, which is the
+    same left-assoc IEEE order as aggregate(zip_with(...)); na·nb and
+    the division are single IEEE ops; round/threshold stay in the JVM.
+    Pinned two ways: (1) unrounded cosines of EVERY pair equal an
+    inline expression join's bit for bit, (2) full probe equals the
+    brute-force all-pairs join and a pruned probe equals the
+    brute-force pairs whose right vector's home cell (numpy argmax-dot)
+    is among the left vector's two best cells."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from sparkt.functions.similarity import (
-        _pair_scores_arrow, cosine_neardup_pairs, dot, norm,
+        _pair_scores_arrow, _pseudo_centroids, cosine_neardup_pairs, dot,
+        norm,
     )
     from sparkt.sources import load_parquet
 
@@ -564,54 +568,62 @@ def test_arrow_pair_scorer_matches_expression_path(spark):
             left, right, threshold=-2.0, id_type=sub.schema["vec_id"].dataType
         ).collect()
     }
-    expr = {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in left.join(right, "cell")
+    expr_df = (
+        left.join(right, "cell")
         .filter(F.col("id_a") < F.col("id_b"))
         .select(
             "id_a", "id_b",
             (dot(F.col("va"), F.col("vb"))
              / (F.col("na") * F.col("nb"))).alias("cos"),
         )
-        .collect()
+    )
+
+    def pairs(df):
+        return {(r["id_a"], r["id_b"]): r["cos"] for r in df.collect()}
+
+    assert arrow == pairs(expr_df)  # exact float equality, no tolerance
+
+    # (2) end-to-end output vs the brute-force join, full and pruned
+    brute = pairs(
+        expr_df.withColumn("cos", F.round("cos", 4))
+        .filter(F.col("cos") >= 0.35)
+    )
+    full = pairs(cosine_neardup_pairs(
+        sub, "vec_id", "embedding", 0.35, dim=64, n_cells=8,
+    ))
+    assert full == brute and len(full) > 0
+
+    vecs = {r["vec_id"]: r["embedding"] for r in sub.collect()}
+    ids = sorted(vecs)
+    scores = np.array([vecs[i] for i in ids]) @ np.array(
+        _pseudo_centroids(64, 64)
+    ).T
+    home = dict(zip(ids, scores.argmax(axis=1)))
+    probe = dict(zip(ids, map(set, np.argsort(-scores, axis=1)[:, :2])))
+    pruned = pairs(cosine_neardup_pairs(
+        sub, "vec_id", "embedding", 0.35, dim=64, n_cells=64, n_probe=2,
+    ))
+    assert pruned == {
+        p: full[p] for p in full if home[p[1]] in probe[p[0]]
     }
-    assert arrow == expr  # exact float equality, no tolerance
-
-    # (2) end-to-end output parity, pruned and full probe
-    for kwargs in (
-        {"n_cells": 64, "n_probe": 2},
-        {"n_cells": 8, "n_probe": None},
-    ):
-        rows_expr = sorted(
-            map(tuple, cosine_neardup_pairs(
-                sub, "vec_id", "embedding", 0.35, dim=64,
-                scorer="expr", **kwargs,
-            ).collect())
-        )
-        rows_arrow = sorted(
-            map(tuple, cosine_neardup_pairs(
-                sub, "vec_id", "embedding", 0.35, dim=64,
-                scorer="arrow", **kwargs,
-            ).collect())
-        )
-        assert rows_expr == rows_arrow, kwargs
-        assert len(rows_expr) > 0, kwargs  # non-vacuous
+    assert 0 < len(pruned) < len(full)
 
 
-def test_arrow_pq_encoder_matches_expression_path(spark):
-    """r16: ivfpq_topk(encoder='arrow') runs the corpus-side cell
-    assign and PQ encode as numpy batch passes. Contract: BIT-exact —
-    squared L2 accumulates one dimension at a time (the _l2sq fold's
-    IEEE order) and np.argmin's first-occurrence tie-break equals
-    array_position's lowest index. Pinned three ways: (1) exact-fold
-    pandas argmin == kmeans_assign on every sf0.1 embedding, (2)
-    arrow PQ codes == expression codes on every embedding, (3) full
-    ivfpq_topk output parity expr vs arrow at the s12 gate shape."""
+def test_pq_encoder_matches_expression_and_numpy(spark):
+    """ivfpq_topk's corpus-side cell assign and pq_encode run as numpy
+    batch passes. Contract: BIT-exact — squared L2 accumulates one
+    dimension at a time (the _l2sq fold's IEEE order) and np.argmin's
+    first-occurrence tie-break equals array_position's lowest index.
+    Pinned on every sf0.1 embedding: (1) the exact-fold argmin equals
+    kmeans_assign's expression fold, (2) the PQ codes equal a numpy
+    argmin over sequentially summed squared differences per
+    subspace."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from sparkt.functions.similarity import (
-        _argmin_l2_exact_pandas, _pq_codes_pandas, _pq_codebooks,
-        _pseudo_centroids, ivfpq_topk, kmeans_assign, pq_encode,
+        _argmin_l2_exact_pandas, _pq_codebooks, _pseudo_centroids,
+        kmeans_assign, pq_encode,
     )
     from sparkt.sources import load_parquet
 
@@ -630,27 +642,22 @@ def test_arrow_pq_encoder_matches_expression_path(spark):
     diff = both.filter(F.col("a_expr") != F.col("a_arrow")).count()
     assert diff == 0
 
-    codes_expr = {
+    m, sub = 8, 8
+    books = np.array(_pq_codebooks(64, m, 16))  # m x codes x sub
+    rows = emb.select("vec_id", "embedding").collect()
+    X = np.array([r["embedding"] for r in rows])
+    expected = np.stack([
+        sum(
+            (X[:, j * sub + d, None] - books[j][None, :, d]) ** 2
+            for d in range(sub)
+        ).argmin(axis=1)
+        for j in range(m)
+    ], axis=1)
+    got = {
         r["vec_id"]: tuple(r["codes"])
         for r in pq_encode(emb, "vec_id", "embedding").collect()
     }
-    codes_arrow = {
-        r["vec_id"]: tuple(r["codes"])
-        for r in pq_encode(
-            emb, "vec_id", "embedding", encoder="arrow"
-        ).collect()
+    assert got == {
+        r["vec_id"]: tuple(int(c) for c in expected[i])
+        for i, r in enumerate(rows)
     }
-    assert codes_expr == codes_arrow
-
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
-    out = {}
-    for enc in ("expr", "arrow"):
-        out[enc] = sorted(map(tuple, ivfpq_topk(
-            queries, corpus, dim=64, k=5, m=8, n_codes=16,
-            n_cells=8, n_probe=2, encoder=enc,
-        ).collect()))
-    assert out["expr"] == out["arrow"]
-    assert len(out["expr"]) > 0  # non-vacuous
